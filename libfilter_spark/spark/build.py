@@ -113,9 +113,8 @@ def select_build_strategy(family: str, grouped: bool, ndv: int,
 # decision is scale-adaptive, not a local-mode constant: a cluster
 # with defaultParallelism in the thousands crosses the threshold at
 # proportionally smaller per-partial sizes.
-_WIDEN_MIN_BYTES = int(os.environ.get("LIBFILTER_WIDEN_MIN", 1 << 20))
-_SMALL_MERGE_MAX = int(os.environ.get("LIBFILTER_SMALL_MERGE_MAX",
-                                      64 << 20))
+_WIDEN_MIN_BYTES = 1 << 20
+_SMALL_MERGE_MAX = 64 << 20
 
 
 def _keys_from_series(s: pd.Series) -> np.ndarray:
@@ -324,7 +323,7 @@ def merge_filter_blobs(partials: DataFrame, group_cols: list[str],
 
     ``est_bytes`` (the caller's plan-time per-partial size estimate)
     routes SMALL merges — est × defaultParallelism within
-    $LIBFILTER_SMALL_MERGE_MAX (64 MB default) — onto single-level
+    _SMALL_MERGE_MAX (64 MB) — onto single-level
     plans: one 1-partition exchange + one Python task for a global
     merge, one grouped exchange + per-partition Python loop for
     grouped merges. The tree exists for tasks × MB-GB partial volumes;

@@ -128,8 +128,8 @@ def build_filter_forest(df: DataFrame, key_col: str = "key",
     reference freezes for (HIBP, ``taffy.tex:1791-1800``): blobs
     ~40% smaller to broadcast, the probe runs the SWAR find (66 vs
     162 ns/key kernel-level), and uniform frozen shards probe through
-    the assembled one-matrix fast path (spark/probe.py
-    _FrozenTcfForestProbe). Zero false negatives are preserved by
+    the assembled one-matrix fast path (the ``frozen_tcf_set`` kind in
+    spark/probe.py's ``_KINDS``). Zero false negatives are preserved by
     construction (freeze never drops a fingerprint); the frozen
     forest cannot absorb further inserts, and dropping the tails
     raises the structural FPP to the tail-less ~SLOTS·2^-HEAD level.

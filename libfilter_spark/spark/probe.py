@@ -1,7 +1,7 @@
 """Distributed membership probe — the Bloom-join pattern.
 
 The merged filters (KBs–MBs per group) are broadcast to every task;
-``mapInPandas`` adds a vectorized membership column (the batched
+an Arrow scalar UDF adds a vectorized membership column (the batched
 analogue of ``libfilter_block_find_hash``, ``block.h:140-152``). A
 probe row only *may* be present (false positives); the semi-join
 helper follows the probe with an exact join against the (pre-pruned)
@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 import threading
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -21,6 +22,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..filters import FAMILIES
+from ..filters.block import BlockFilter, BlockSliceFilter
+from ..filters.taffy_cuckoo import _FROZEN_MAGIC
+from ..filters.taffy_cuckoo import _MAGIC as _TCF_MAGIC
 from .build import _keys_from_series
 
 # one lock guards every module-level cache below: driver-side queries
@@ -42,65 +46,57 @@ _FILTER_CACHE_MAX = 16
 _BC_CACHE: dict[tuple, object] = {}
 _BC_CACHE_MAX = 8
 
-# shard-frame probe memo: (appId, fingerprint) → (mode, broadcast,
-# params) — lets a repeat probe of an unchanged CACHED shard frame
-# skip the blob collect entirely (the fingerprint is a one-pass JVM
-# aggregation; see _probe_shard_frame)
-_SHARD_PROBE_CACHE: dict[tuple, tuple] = {}
-
-# grouped-frame probe memo (round-6, verdict task 4): (appId,
-# fingerprint) → broadcast. Iterative pipelines that re-probe an
-# unchanged cached grouped filters frame per round (e.g. dedup
-# verification passes) then skip the per-call blob collect + token
-# hash + broadcast dump — the same treatment shard frames got in r5.
-_GROUPED_PROBE_CACHE: dict[tuple, object] = {}
-
-# filter maps at least this big (in total) are materialized once into
-# /dev/shm and memory-mapped: N python workers then share ONE
-# page-cached copy instead of N private deserialized arrays. Default
-# raised past the broadcast budget in round 5 — a direct shm-vs-private
-# A/B on a 110 MB TBF forest measured shm NEUTRAL at 8 workers and 40%
-# SLOWER at 32 (5.53 s vs 3.53 s per 4M-key probe, min-of-3; shared
-# tmpfs mappings contend where private heap copies do not), so within
-# the 256 MB broadcast budget private copies win outright. Lower
-# LIBFILTER_SHM_MIN on RSS-constrained executors to trade probe speed
-# for workers x map_bytes of resident memory. (Global shard probes
-# don't hit this trade anymore: _SHM_ASM_MIN below shares the
-# ASSEMBLED state with a private-copy attach, getting both.)
-_SHM_MIN_BYTES = int(os.environ.get("LIBFILTER_SHM_MIN", 256 << 20))
-_SHM_BLOB_FLOOR = int(os.environ.get("LIBFILTER_SHM_BLOB_FLOOR",
-                                     256 << 10))
+# fingerprint memo for CACHED filters frames: (appId, "groupfp" |
+# "shardfp", fingerprint) → what the probe recorded (grouped: the
+# broadcast; shard frames: (mode, broadcast, params, asm_meta)). A
+# repeat probe of an unchanged frame (iterative pipelines, dedup
+# verification passes) then skips the per-call blob collect, token
+# hash and broadcast dump; the fingerprint is a one-pass JVM
+# aggregation (see _fingerprint). Room for _BC_CACHE_MAX frames of
+# each tag.
+_PROBE_MEMO: dict[tuple, object] = {}
+_PROBE_MEMO_MAX = 2 * _BC_CACHE_MAX
 
 # Global shard-frame probes ASSEMBLE per-worker state (block slices →
-# one BlockFilter; single-level TBF forest → one concatenated probe
-# matrix). Past this size the assembled state is published ONCE per
-# box to /dev/shm by a single lock-holding worker and attached
-# read-only by the rest — without it, every python worker privately
-# assembles ~map_bytes of state (and unpickles the broadcast first),
-# and worker churn re-pays that repeatedly: measured on a 110 MB /
-# 50M-key TBF-jvm forest at local[32], cold 4M-key probe 17.2 s and
-# post-churn re-probes 6.2 s vs 1.2 s warm. Unlike LIBFILTER_SHM_MIN
-# (which shares raw BLOBS but still deserializes per worker), this
-# shares the finished probe state itself.
-_SHM_ASM_MIN = int(os.environ.get("LIBFILTER_SHM_ASM_MIN", 32 << 20))
-# Attachers COPY the published state into private memory by default:
-# one streaming memcpy per worker (~ms) buys private-heap gather speed
-# — a direct A/B on the 110 MB forest at local[32] measured gathers
-# from the shared tmpfs mapping ~60% slower on a warm 50M-key probe
-# (5.26 s vs 3.25 s) while cold start still improves 3.4× because the
-# copy replaces broadcast-unpickle + re-assembly. Set =0 on
-# RSS-constrained executors to keep the zero-copy mapping (workers
-# then share ONE resident copy at the gather penalty).
-_SHM_ASM_COPY = os.environ.get("LIBFILTER_SHM_ASM_COPY", "1") != "0"
+# one BlockFilter; forests → concatenated probe matrices, see _KINDS).
+# Past this size the assembled state is published ONCE per box to
+# /dev/shm by a single lock-holding worker and attached by the rest —
+# without it, every python worker privately assembles ~map_bytes of
+# state (and unpickles the broadcast first), and worker churn re-pays
+# that repeatedly: measured on a 110 MB / 50M-key TBF-jvm forest at
+# local[32], cold 4M-key probe 17.2 s and post-churn re-probes 6.2 s
+# vs 1.2 s warm.
+_SHM_ASM_MIN = 32 << 20
+# Attachers COPY the published state into private memory: one
+# streaming memcpy per worker (~ms) buys private-heap gather speed — a
+# direct A/B on the 110 MB forest at local[32] measured gathers from
+# the shared tmpfs mapping ~60% slower on a warm 50M-key probe (5.26 s
+# vs 3.25 s) while cold start still improves 3.4× because the copy
+# replaces broadcast-unpickle + re-assembly. False keeps the zero-copy
+# mapping (workers share ONE resident copy at the gather penalty).
+_SHM_ASM_COPY = True
 # how long a non-assembling worker waits for the publisher before
 # falling back to private assembly, and when a lock counts as stale
 # (its holder died mid-assembly). Stale is deliberately LONGER than
 # the wait: a slow-but-alive publisher must not trigger a takeover
 # stampede (waiters give up and assemble privately instead); takeover
 # only heals locks of dead publishers for workers that arrive later.
-_ASM_WAIT_S = float(os.environ.get("LIBFILTER_SHM_ASM_WAIT", "120"))
-_ASM_LOCK_STALE_S = float(os.environ.get("LIBFILTER_SHM_ASM_STALE",
-                                         "300"))
+_ASM_WAIT_S = 120.0
+_ASM_LOCK_STALE_S = 300.0
+
+
+def _cache_put(cache: dict, key, value, cap: int):
+    """Bounded FIFO insert under _CACHE_LOCK. A key another thread
+    inserted first wins and is returned, so racing callers share one
+    value (one broadcast per content token)."""
+    with _CACHE_LOCK:
+        hit = cache.get(key)
+        if hit is not None:
+            return hit
+        while len(cache) >= cap:
+            cache.pop(next(iter(cache)))
+        cache[key] = value
+        return value
 
 
 def collect_filters(filters_df: DataFrame, group_cols: list[str]) -> dict:
@@ -110,11 +106,14 @@ def collect_filters(filters_df: DataFrame, group_cols: list[str]) -> dict:
             for r in rows}
 
 
-# broadcast-probe budget: past this many bytes of collected filter
-# blobs the driver hop (collect + sc.broadcast) becomes the chokepoint
-# (10^5 groups x MB blobs), and the probe switches to a shuffle
-# cogroup — filters stay distributed, probe keys shuffle to them.
-_BROADCAST_MAX = int(os.environ.get("LIBFILTER_BROADCAST_MAX", 256 << 20))
+def _broadcast_max() -> int:
+    """Broadcast-probe budget: past this many bytes of collected filter
+    blobs the driver hop (collect + sc.broadcast) becomes the
+    chokepoint (10^5 groups x MB blobs), and the probe switches to a
+    shuffle cogroup — filters stay distributed, probe keys shuffle to
+    them. Read per call, so $LIBFILTER_BROADCAST_MAX set after import
+    takes effect."""
+    return int(os.environ.get("LIBFILTER_BROADCAST_MAX", 256 << 20))
 
 
 def _collect_filters_auto(filters_df: DataFrame,
@@ -141,9 +140,10 @@ def _collect_filters_auto(filters_df: DataFrame,
     sl = filters_df.storageLevel
     session_parts = int(filters_df.sparkSession.conf.get(
         "spark.sql.shuffle.partitions", "200"))
+    budget = _broadcast_max()
     if (sl.useMemory or sl.useDisk) or session_parts <= 64:
         out = collect_filters(filters_df, group_cols)
-        if sum(len(b) for _, b in out.values()) > _BROADCAST_MAX:
+        if sum(len(b) for _, b in out.values()) > budget:
             import warnings
             warnings.warn(
                 "collected filter blobs exceed LIBFILTER_BROADCAST_MAX; "
@@ -158,7 +158,7 @@ def _collect_filters_auto(filters_df: DataFrame,
     for r in it:
         blob = bytes(r["filter"])
         total += len(blob)
-        if total > _BROADCAST_MAX:
+        if total > budget:
             return None
         out[tuple(r[c] for c in group_cols)] = (r["family"], blob)
     return out
@@ -178,6 +178,7 @@ def _collect_shard_rows_auto(filters_df: DataFrame) -> list | None:
     per-partition mini-job scheduling costs more than the blobs it
     guards against)."""
     sel = filters_df.select("__shard", "params", "family", "filter")
+    budget = _broadcast_max()
     session_parts = int(filters_df.sparkSession.conf.get(
         "spark.sql.shuffle.partitions", "200"))
     if session_parts <= 64:
@@ -199,7 +200,7 @@ def _collect_shard_rows_auto(filters_df: DataFrame) -> list | None:
             n_sh = int(_json.loads(head["params"]).get("n_shards", 1))
         except (ValueError, TypeError):
             n_sh = 1
-        if n_sh * int(head["l"]) > _BROADCAST_MAX:
+        if n_sh * int(head["l"]) > budget:
             import warnings
             warnings.warn(
                 "estimated shard blobs exceed LIBFILTER_BROADCAST_MAX "
@@ -208,7 +209,7 @@ def _collect_shard_rows_auto(filters_df: DataFrame) -> list | None:
                 "via='shuffle' to skip the estimate job too")
             return None
         rows = sel.collect()
-        if sum(len(r["filter"]) for r in rows) > _BROADCAST_MAX:
+        if sum(len(r["filter"]) for r in rows) > budget:
             import warnings
             warnings.warn(
                 "collected shard blobs exceed LIBFILTER_BROADCAST_MAX; "
@@ -220,92 +221,125 @@ def _collect_shard_rows_auto(filters_df: DataFrame) -> list | None:
     total = 0
     for r in sel.toLocalIterator(prefetchPartitions=True):
         total += len(r["filter"])
-        if total > _BROADCAST_MAX:
+        if total > budget:
             return None
         rows.append(r)
     return rows
 
 
-def _assembled_block_bytes(slice_blobs: list[bytes]) -> bytes:
-    """Concatenate disjoint block_slice blobs into the raw LE-u32 byte
-    array of the GLOBAL filter (missing shards = zero ranges = no keys),
-    byte-identical to assemble_block_shards' export."""
-    from ..filters.block import BlockSliceFilter
-    slices = [BlockSliceFilter.deserialize(b) for b in slice_blobs]
-    nb = slices[0].num_buckets
-    out = bytearray(nb * 32)
-    for sl in slices:
-        off = sl.lo * 32
-        blob = sl.state.astype("<u4", copy=False).tobytes()
-        out[off:off + len(blob)] = blob
-    return bytes(out)
+def _header_uniform(shard_blobs: dict[int, bytes], magic: bytes,
+                    spans: tuple) -> bool:
+    """Driver-side eligibility from fixed-offset header bytes alone:
+    every blob starts with ``magic`` and all blobs agree on the bytes
+    at ``spans`` (the fields a concatenated probe matrix needs to
+    share). No payload is touched."""
+    end = max(sp.stop for sp in spans)
+    sig = None
+    for blob in shard_blobs.values():
+        if blob[:len(magic)] != magic or len(blob) < end:
+            return False
+        hdr = b"".join(blob[sp] for sp in spans)
+        if sig is None:
+            sig = hdr
+        elif hdr != sig:
+            return False
+    return sig is not None
 
 
-class _TbfForestProbe:
-    """Assembled probe view of a SINGLE-LEVEL taffy_block forest (the
-    jvm engine's shape: pre-sized shards that never upsized). All
-    shards share one level-0 bucket count, so the whole forest
-    concatenates into one (S × nb, 4) u64 matrix and a batch probes in
-    ONE vectorized pass: global bucket = shard × nb + level-0 bucket.
-    This removes the grouped route's per-batch pandas groupby and its
-    S tiny find_hashes calls — measured 875 ns/key there vs the
-    ~120 ns/key block-probe floor this path runs at."""
+def _tbf_forest_uniform(shard_blobs: dict[int, bytes]) -> bool:
+    """Driver-side eligibility for the assembled TBF forest probe:
+    every absolute level index has one bucket count across all shards
+    (zero-copy header reads). Always true for one forest's shards —
+    the level schedule is a function of the shared creation params —
+    so this only rejects frames mixing foreign filters."""
+    from ..filters.taffy_block import TaffyBlockFilter
+    sizes: dict[int, int] = {}
+    seen = False
+    for blob in shard_blobs.values():
+        f = TaffyBlockFilter.deserialize_view(
+            np.frombuffer(blob, dtype=np.uint8))
+        for i, lvl in enumerate(f.levels):
+            seen = True
+            if sizes.setdefault(i, lvl.size) != lvl.size:
+                return False
+    return seen
 
-    def __init__(self, n_shards: int, num_buckets: int,
-                 state64: "np.ndarray"):
-        self.n_shards = n_shards
-        self.num_buckets = num_buckets
-        self.b64 = state64.reshape(-1, 4)          # (S*nb, 4) u64
+
+# Assembled probe kinds. Each global shard-frame shape a worker can
+# assemble into ONE probe object implements the same protocol:
+#
+#   kind      name of the broadcast map entry and of the /dev/shm file
+#   family    the shard frame's ``family`` column it assembles
+#   uniform(shard_blobs)           driver-side header check (eligible?)
+#   assemble(n_shards, shard_blobs) → probe object, or None
+#   to_raw() → flat u64 image;  from_raw(n_shards, raw) → object|None
+#   find(keys, binary) → bool membership per key
+#
+# and is registered in _KINDS below.
+
+
+class _BlockSliceProbe(BlockFilter):
+    """Assembled probe view of a ``bucket_range`` block shard frame:
+    the disjoint slices concatenate into the GLOBAL filter (missing
+    shards = zero ranges = no keys), byte-identical to
+    assemble_block_shards' export, so a batch is a plain global block
+    probe — no JVM shard column, no per-batch groupby (measured ~1.5×
+    over the grouped route). The state is a view into the raw image
+    [n_shards, num_buckets, LE-u32 filter words], so publishing costs
+    no extra copy."""
+
+    __slots__ = ("raw",)
+    kind, family = "block_slice_set", "block_slice"
+    # serialize(): <u8 global num_buckets | <u8 lo | words — every
+    # slice of one filter shares num_buckets
+    uniform = staticmethod(partial(_header_uniform, magic=b"",
+                                   spans=(slice(0, 8),)))
+
+    def __init__(self, raw: "np.ndarray"):
+        super().__init__(raw[2:].view(np.uint32))
+        self.raw = raw
 
     @classmethod
     def assemble(cls, n_shards: int, shard_blobs: dict[int, bytes]):
-        """→ _TbfForestProbe, or None when the forest is not eligible
-        (multi-level shards or non-uniform level-0 sizes). Levels are
-        read through deserialize_view (zero-copy) so assembly costs
-        exactly one pass over the blobs."""
-        from ..filters.taffy_block import TaffyBlockFilter
         from ..kernels import block as K
-        nb = None
-        levels: dict[int, np.ndarray] = {}
-        for s, blob in shard_blobs.items():
-            f = TaffyBlockFilter.deserialize_view(
-                np.frombuffer(blob, dtype=np.uint8))
-            if len(f.levels) != 1:
-                return None
-            lvl_nb = f.levels[0].size // K.WORDS_PER_BUCKET
-            if nb is None:
-                nb = lvl_nb
-            elif nb != lvl_nb:
-                return None
-            levels[s] = f.levels[0]
-        if nb is None:
+        if not shard_blobs:
             return None
-        state = np.zeros(n_shards * nb * K.WORDS_PER_BUCKET,
-                         dtype=np.uint32)
-        span = nb * K.WORDS_PER_BUCKET
-        for s, lvl in levels.items():
-            state[s * span:(s + 1) * span] = lvl
-        return cls(n_shards, nb, state.view(np.uint64))
+        hdr = BlockSliceFilter._HEADER
+        nb = int(np.frombuffer(next(iter(shard_blobs.values())),
+                               dtype="<u8", count=1)[0])
+        raw = np.zeros(2 + 4 * nb, dtype=np.uint64)  # 4 u64 per bucket
+        raw[:2] = n_shards, nb
+        state = raw[2:].view(np.uint32)
+        for blob in shard_blobs.values():
+            lo = int(np.frombuffer(blob, dtype="<u8", count=1,
+                                   offset=8)[0])
+            words = np.frombuffer(blob, dtype="<u4", offset=hdr)
+            off = lo * K.WORDS_PER_BUCKET
+            state[off:off + words.size] = words
+        return cls(raw)
+
+    def to_raw(self) -> "np.ndarray":
+        return self.raw
+
+    @classmethod
+    def from_raw(cls, n_shards: int, raw: "np.ndarray"):
+        """None on any size mismatch (truncated or foreign file ⇒
+        caller assembles privately)."""
+        if raw.size < 3 or int(raw[0]) != n_shards \
+                or raw.size != 2 + 4 * int(raw[1]):
+            return None
+        return cls(raw)
 
     def find(self, keys: "np.ndarray", binary: bool) -> "np.ndarray":
-        from ..kernels import block as K
-        from ..kernels.keys import shard_of_keys
-        if len(keys) == 0:
-            return np.zeros(0, dtype=bool)
-        shards = shard_of_keys(keys, self.n_shards, binary=binary)
-        idx = K.bucket_index(keys, self.num_buckets).astype(np.int64) \
-            + shards * np.int64(self.num_buckets)
-        m64 = np.ascontiguousarray(K.make_masks(keys)).view(np.uint64)
-        g = self.b64[idx]
-        np.bitwise_and(g, m64, out=g)
-        return (g == m64).all(axis=1)
+        return self.find_hashes(keys)
 
 
 class _TbfForestMultiProbe:
-    """Assembled probe view of a GROWN (multi-level) taffy_block
-    forest. Every shard of a forest is created with the same
-    (per-shard ndv, fpp), so level ``i``'s bucket count is a function
-    of the level index alone (the 6/π² sizing schedule,
+    """Assembled probe view of a taffy_block forest — single-level
+    (the jvm engine's pre-sized shape) or GROWN multi-level: a forest
+    of one level is a stack of one. Every shard of a forest is created
+    with the same (per-shard ndv, fpp), so level ``i``'s bucket count
+    is a function of the level index alone (the 6/π² sizing schedule,
     ``taffy-block.h:56-66``) — shards differ only in how many levels
     they have grown. Level ``i`` of every shard that has it therefore
     concatenates into ONE (R_i, 4) u64 matrix with a per-shard row
@@ -319,6 +353,9 @@ class _TbfForestMultiProbe:
     growth-sweep gap: 3.5 Mk/s grouped vs 14 Mk/s for the same-shape
     assembled block probe). Lane masks are computed ONCE per batch and
     compressed along with the keys (they depend only on the key)."""
+
+    kind, family = "tbf_forest_set", "taffy_block"
+    uniform = staticmethod(_tbf_forest_uniform)
 
     def __init__(self, n_shards: int, nbs: list[int],
                  offsets: "np.ndarray", mats: list):
@@ -415,13 +452,15 @@ class _TbfForestMultiProbe:
         m64 = np.ascontiguousarray(K.make_masks(hs)).view(np.uint64)
         idx = None                # None ⇒ every lane still pending
         for i in reversed(range(len(self.mats))):
-            off = self.offsets[i][sh]
             if self.full[i]:
                 # every shard has level i (the common case: all but
-                # the newest level or two) — probe all pending lanes
-                # without the fancy-index copies
+                # the newest level or two), so assemble stored them in
+                # shard order — probe all pending lanes without the
+                # offset gather or the fancy-index copies
                 vpos, vk, vm = None, hs, m64
+                off = sh * np.int64(self.nbs[i])
             else:
+                off = self.offsets[i][sh]
                 vpos = np.flatnonzero(off >= 0)
                 if vpos.size == 0:
                     continue
@@ -430,10 +469,18 @@ class _TbfForestMultiProbe:
             g = self.mats[i][bi]
             np.bitwise_and(g, vm, out=g)
             found = (g == vm).all(axis=1)
+            if i == 0 and idx is None and vpos is None:
+                # the oldest level probed every lane and no newer one
+                # found any: its mask is the answer (a single-level
+                # forest's one pass — no scatter into ``out``)
+                return found
             if found.any():
                 hit = np.flatnonzero(found) if vpos is None \
                     else vpos[found]
                 out[hit if idx is None else idx[hit]] = True
+                if i == 0:
+                    break  # oldest level: no later pass needs the
+                    # compressed lanes
                 keep = np.ones(len(hs), dtype=bool)
                 keep[hit] = False
                 idx = np.flatnonzero(keep) if idx is None else idx[keep]
@@ -459,6 +506,11 @@ class _FrozenTcfForestProbe:
     routed to a shard with NO row in the frame report False (parity
     with the grouped route, which the fp==0 always-true quirk would
     otherwise break on missing shards)."""
+
+    kind, family = "frozen_tcf_set", "frozen_taffy_cuckoo"
+    # serialize(): magic 4B | log 1B | entropy 64B
+    uniform = staticmethod(partial(_header_uniform, magic=_FROZEN_MAGIC,
+                                   spans=(slice(4, 69),)))
 
     def __init__(self, n_shards: int, log: int, entropy: tuple,
                  data: list, stashes: list, present: "np.ndarray"):
@@ -592,6 +644,12 @@ class _LiveTcfForestProbe:
     array (prefix test stays exact, duplicates handled by window
     offsets); keys routed to a shard with NO row in the frame report
     False, matching the grouped route."""
+
+    kind, family = "tcf_set", "taffy_cuckoo"
+    # serialize(): magic 4B | log 1B + occupied 8B | rng 24B | entropy
+    # 64B — the rng state varies per shard, so it is skipped
+    uniform = staticmethod(partial(_header_uniform, magic=_TCF_MAGIC,
+                                   spans=(slice(4, 5), slice(37, 101))))
 
     def __init__(self, n_shards: int, log: int, entropy: tuple,
                  data: list, stash_codes: list, stash_tails: list,
@@ -752,76 +810,18 @@ class _LiveTcfForestProbe:
         return out & self.present[shards]
 
 
-def _live_tcf_uniform(shard_blobs: dict[int, bytes]) -> bool:
-    """Driver-side eligibility for the assembled live-TCF probe: every
-    shard shares one (log_side_size, entropy) header — a 65-byte
-    compare at fixed offsets (serialize(): magic 4B | log 1B +
-    occupied 8B | rng 24B | entropy 64B), no slot data touched."""
-    from ..filters.taffy_cuckoo import _MAGIC
-    sig = None
-    for blob in shard_blobs.values():
-        if blob[:4] != _MAGIC or len(blob) < 101:
-            return False
-        hdr = blob[4:5] + blob[37:101]  # log + entropy (rng varies)
-        if sig is None:
-            sig = hdr
-        elif hdr != sig:
-            return False
-    return sig is not None
-
-
-def _frozen_tcf_uniform(shard_blobs: dict[int, bytes]) -> bool:
-    """Driver-side eligibility for the assembled frozen-TCF probe:
-    every shard shares one (log_side_size, entropy) header — a
-    65-byte prefix compare, no bucket data touched."""
-    from ..filters.taffy_cuckoo import _FROZEN_MAGIC
-    sig = None
-    for blob in shard_blobs.values():
-        if blob[:4] != _FROZEN_MAGIC or len(blob) < 69:
-            return False
-        hdr = blob[4:69]  # log (1B) + entropy (64B)
-        if sig is None:
-            sig = hdr
-        elif hdr != sig:
-            return False
-    return sig is not None
-
-
-def _tbf_level0_uniform(shard_blobs: dict[int, bytes]) -> bool:
-    """Driver-side eligibility for the assembled forest probe: every
-    shard single-level with one shared level-0 bucket count
-    (zero-copy header reads — no blob is materialized twice)."""
-    from ..filters.taffy_block import TaffyBlockFilter
-    nb = None
-    for blob in shard_blobs.values():
-        f = TaffyBlockFilter.deserialize_view(
-            np.frombuffer(blob, dtype=np.uint8))
-        if len(f.levels) != 1:
-            return False
-        if nb is None:
-            nb = f.levels[0].size
-        elif f.levels[0].size != nb:
-            return False
-    return nb is not None
-
-
-def _tbf_forest_uniform(shard_blobs: dict[int, bytes]) -> bool:
-    """Driver-side eligibility for the assembled MULTI-level forest
-    probe: every absolute level index has one bucket count across all
-    shards (zero-copy header reads). Always true for one forest's
-    shards — the level schedule is a function of the shared creation
-    params — so this only rejects frames mixing foreign filters."""
-    from ..filters.taffy_block import TaffyBlockFilter
-    sizes: dict[int, int] = {}
-    seen = False
-    for blob in shard_blobs.values():
-        f = TaffyBlockFilter.deserialize_view(
-            np.frombuffer(blob, dtype=np.uint8))
-        for i, lvl in enumerate(f.levels):
-            seen = True
-            if sizes.setdefault(i, lvl.size) != lvl.size:
-                return False
-    return seen
+# one registry of assembled kinds, indexed by kind (broadcast entries,
+# /dev/shm files) and by shard-frame family (the driver's route pick).
+# minimal_taffy_cuckoo forests deliberately have no kind: each shard's
+# level geometry depends on its own cursor (which levels doubled) and
+# per-side hi/lo permutations, so a shared-permutation concatenated
+# matrix does not exist unless every shard grew in lockstep — and the
+# measured headroom is small (100M sweep: MTCF grouped 14.3 Mk/s vs
+# TCF assembled 16.7, BENCH/growth100m.json).
+_KINDS = {c.kind: c for c in (_BlockSliceProbe, _TbfForestMultiProbe,
+                              _FrozenTcfForestProbe, _LiveTcfForestProbe)}
+_KIND_OF_FAMILY = {c.family: c for c in _KINDS.values()}
+_ASSEMBLED = tuple(_KINDS.values())
 
 
 def _content_token(filter_map: dict) -> str:
@@ -844,68 +844,12 @@ def _content_token(filter_map: dict) -> str:
         upd(repr((g, fam)).encode())
         if isinstance(blob, (bytes, bytearray)):
             upd(blob)
-        elif isinstance(blob, tuple):  # (n_shards, {shard: blob})
+        else:  # assembled kind: (n_shards, {shard: blob})
             upd(str(blob[0]).encode())
             for s in sorted(blob[1]):
                 upd(str(s).encode())
                 upd(blob[1][s])
-        else:  # list of slice blobs
-            for x in blob:
-                upd(x)
     return h.hexdigest()
-
-
-def _blob_bytes(blob) -> int:
-    """Total serialized bytes of one collected entry (bytes, a list of
-    slice blobs, or the (n_shards, {shard: blob}) forest tuple)."""
-    if isinstance(blob, (bytes, bytearray)):
-        return len(blob)
-    if isinstance(blob, tuple):
-        return sum(len(b) for b in blob[1].values())
-    return sum(len(x) for x in blob)
-
-
-def _shm_blob(token: str, g, blob: bytes) -> "np.memmap":
-    """Write the blob once to /dev/shm (atomic rename; first writer
-    wins) and return a read-only byte memmap — N python workers then
-    share ONE page-cached copy."""
-    import hashlib
-
-    import numpy as np
-
-    name = hashlib.sha256(
-        (token + repr(g)).encode()).hexdigest()[:24]
-    path = f"/dev/shm/libfilter_{name}.u4"
-    # best-effort TTL sweep so abandoned filters don't pin shm
-    import glob
-    import time
-    for old in glob.glob("/dev/shm/libfilter_*.u4"):
-        try:
-            if time.time() - os.path.getmtime(old) > 3600:
-                os.unlink(old)
-        except OSError:
-            pass
-    if not os.path.exists(path):
-        tmp = f"{path}.{os.getpid()}.tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(blob)
-        os.replace(tmp, path)
-    return np.memmap(path, dtype=np.uint8, mode="r")
-
-
-def _filter_via_shm(token: str, g, fam: str, blob: bytes):
-    """shm-backed zero-copy deserialization for the families whose
-    probe state is flat arrays (block: the raw u4 array; taffy_block:
-    read-only level views via deserialize_view)."""
-    import numpy as np
-
-    from ..filters.block import BlockFilter
-    from ..filters.taffy_block import TaffyBlockFilter
-
-    arr = _shm_blob(token, g, blob)
-    if fam == "block":
-        return BlockFilter(arr.view(np.uint32))
-    return TaffyBlockFilter.deserialize_view(arr)
 
 
 def _asm_path(token: str, kind: str) -> str:
@@ -917,14 +861,10 @@ def _asm_path(token: str, kind: str) -> str:
 def _attach_assembled(asm_meta: dict):
     """Attach the shared ASSEMBLED probe state for a global shard
     probe, if some worker already published it to /dev/shm. Returns
-    the probe object or None. By default the state is stream-copied
-    into private memory (one memcpy buys THP-speed gathers — see
-    _SHM_ASM_COPY); =0 keeps the read-only memmap. The state is
-    self-describing given the meta: bucket count falls out of the file
-    size, so no header is needed."""
-    from ..filters.block import BlockFilter
-    from ..kernels import block as K
-
+    the probe object or None (no file, or a truncated/foreign one —
+    each kind's from_raw checks the image against its own header). The
+    state is stream-copied into private memory (one memcpy buys
+    THP-speed gathers — see _SHM_ASM_COPY)."""
     path = _asm_path(asm_meta["token"], asm_meta["kind"])
     if not os.path.exists(path):
         return None
@@ -935,35 +875,10 @@ def _attach_assembled(asm_meta: dict):
     except OSError:
         pass
     try:
-        if asm_meta["kind"] == "tbf_level0_set":
-            mm = np.memmap(path, dtype=np.uint64, mode="r")
-            n_sh = int(asm_meta["n_shards"])
-            words = K.WORDS_PER_BUCKET // 2  # u64 words per bucket
-            nb = mm.size // (n_sh * words)
-            if nb * n_sh * words != mm.size or nb == 0:
-                return None  # truncated/foreign file: assemble privately
-            state = np.array(mm) if _SHM_ASM_COPY else mm
-            return _TbfForestProbe(n_sh, nb, state)
-        if asm_meta["kind"] == "tbf_forest_set":
-            mm = np.memmap(path, dtype=np.uint64, mode="r")
-            arr = np.array(mm) if _SHM_ASM_COPY else mm
-            return _TbfForestMultiProbe.from_raw(
-                int(asm_meta["n_shards"]), arr)
-        if asm_meta["kind"] == "frozen_tcf_set":
-            mm = np.memmap(path, dtype=np.uint64, mode="r")
-            arr = np.array(mm) if _SHM_ASM_COPY else mm
-            return _FrozenTcfForestProbe.from_raw(
-                int(asm_meta["n_shards"]), arr)
-        if asm_meta["kind"] == "tcf_set":
-            mm = np.memmap(path, dtype=np.uint64, mode="r")
-            arr = np.array(mm) if _SHM_ASM_COPY else mm
-            return _LiveTcfForestProbe.from_raw(
-                int(asm_meta["n_shards"]), arr)
-        mm32 = np.memmap(path, dtype=np.uint32, mode="r")
-        exp = asm_meta.get("bytes")
-        if exp is not None and mm32.size * 4 != exp:
-            return None  # truncated/foreign file: assemble privately
-        return BlockFilter(np.array(mm32) if _SHM_ASM_COPY else mm32)
+        mm = np.memmap(path, dtype=np.uint64, mode="r")
+        return _KINDS[asm_meta["kind"]].from_raw(
+            int(asm_meta["n_shards"]),
+            np.array(mm) if _SHM_ASM_COPY else mm)
     except (OSError, ValueError):
         return None
 
@@ -1006,8 +921,8 @@ def _publish_assembled(asm_meta: dict, build_fn):
 
     path = _asm_path(asm_meta["token"], asm_meta["kind"])
     lock = path + ".lock"
-    # TTL sweep of abandoned asm state + locks (same policy as
-    # _shm_blob's blob sweep)
+    # best-effort TTL sweep so abandoned asm state + locks don't pin
+    # shm
     import glob
     for old in glob.glob("/dev/shm/libfilter_asm_*"):
         try:
@@ -1066,41 +981,13 @@ def _publish_assembled(asm_meta: dict, build_fn):
                 pass
 
 
-def _filter_cache_put(token: str, cached: dict) -> None:
-    with _CACHE_LOCK:
-        while len(_FILTER_CACHE) >= _FILTER_CACHE_MAX:
-            _FILTER_CACHE.pop(next(iter(_FILTER_CACHE)), None)
-        _FILTER_CACHE[token] = cached
-
-
-def _asm_build_from_map(filter_map: dict):
-    """Publisher-side builder: the global map's single assembled-kind
-    entry → (probe object, raw array to publish)."""
-    from ..filters.block import BlockFilter
-
-    fam, blob = filter_map[()]
-    if fam == "tbf_level0_set":
-        n_sh, shard_blobs = blob
-        pv = _TbfForestProbe.assemble(n_sh, shard_blobs)
-        assert pv is not None  # driver checked eligibility
-        return pv, pv.b64
-    if fam == "tbf_forest_set":
-        n_sh, shard_blobs = blob
-        pv = _TbfForestMultiProbe.assemble(n_sh, shard_blobs)
-        assert pv is not None  # driver checked eligibility
-        return pv, pv.to_raw()
-    if fam == "frozen_tcf_set":
-        n_sh, shard_blobs = blob
-        pv = _FrozenTcfForestProbe.assemble(n_sh, shard_blobs)
-        assert pv is not None  # driver checked eligibility
-        return pv, pv.to_raw()
-    if fam == "tcf_set":
-        n_sh, shard_blobs = blob
-        pv = _LiveTcfForestProbe.assemble(n_sh, shard_blobs)
-        assert pv is not None  # driver checked eligibility
-        return pv, pv.to_raw()
-    raw = np.frombuffer(_assembled_block_bytes(blob), np.uint8)
-    return BlockFilter(raw.view(np.uint32)), raw
+def _assemble(fam: str, blob: tuple):
+    """Private assembly of one assembled-kind map entry (n_shards,
+    {shard: blob}); the driver's uniform check made it eligible."""
+    pv = _KINDS[fam].assemble(*blob)
+    if pv is None:
+        raise ValueError(f"{fam}: shards are not uniform")
+    return pv
 
 
 def _materialize(bc, asm_meta: dict | None = None) -> dict:
@@ -1116,73 +1003,27 @@ def _materialize(bc, asm_meta: dict | None = None) -> dict:
         cached = _FILTER_CACHE.get(asm_meta["token"])
         if cached is not None:
             return cached
+
+        def build():
+            pv = _assemble(*bc.value[1][()])
+            return pv, pv.to_raw()
+
         got = _attach_assembled(asm_meta)
         if got is None:
-            got = _publish_assembled(
-                asm_meta, lambda: _asm_build_from_map(bc.value[1]))
+            got = _publish_assembled(asm_meta, build)
         if got is not None:
-            cached = {(): got}
-            _filter_cache_put(asm_meta["token"], cached)
-            return cached
+            return _cache_put(_FILTER_CACHE, asm_meta["token"],
+                              {(): got}, _FILTER_CACHE_MAX)
         # shm unavailable or publisher too slow → private assembly
 
     token, filter_map = bc.value
     cached = _FILTER_CACHE.get(token)
     if cached is None:
-        cached = {}
-        # shm triggers on the TOTAL map size (a forest of 128 x 4 MB
-        # shards costs each worker as much private memory as one
-        # 512 MB filter would), with a per-blob floor so 10^4 tiny
-        # groups don't explode into 10^4 shm files
-        total = sum(_blob_bytes(b) for _, b in filter_map.values())
-        use_shm = os.path.isdir("/dev/shm") and total >= _SHM_MIN_BYTES
-        for g, (fam, blob) in filter_map.items():
-            if fam == "tbf_level0_set":
-                # single-level TBF forest: one concatenated probe
-                # matrix per worker (see _TbfForestProbe); the shared
-                # publish path above handled the asm_meta case
-                n_sh, shard_blobs = blob
-                cached[g] = _TbfForestProbe.assemble(n_sh, shard_blobs)
-                assert cached[g] is not None  # driver checked eligibility
-                continue
-            if fam == "tbf_forest_set":
-                # grown multi-level TBF forest: per-level concatenated
-                # matrices (see _TbfForestMultiProbe)
-                n_sh, shard_blobs = blob
-                cached[g] = _TbfForestMultiProbe.assemble(n_sh,
-                                                          shard_blobs)
-                assert cached[g] is not None  # driver checked eligibility
-                continue
-            if fam == "frozen_tcf_set":
-                # uniform frozen-TCF forest: one concatenated SWAR
-                # matrix per side (see _FrozenTcfForestProbe)
-                n_sh, shard_blobs = blob
-                cached[g] = _FrozenTcfForestProbe.assemble(n_sh,
-                                                           shard_blobs)
-                assert cached[g] is not None  # driver checked eligibility
-                continue
-            if fam == "tcf_set":
-                # uniform LIVE TCF forest: one concatenated u16 slot
-                # matrix per side (see _LiveTcfForestProbe)
-                n_sh, shard_blobs = blob
-                cached[g] = _LiveTcfForestProbe.assemble(n_sh,
-                                                         shard_blobs)
-                assert cached[g] is not None  # driver checked eligibility
-                continue
-            if fam == "block_slice_set":
-                # shard-frame fast path: assemble the disjoint slices
-                # into ONE BlockFilter per worker (plain global probe —
-                # no shard column, no per-batch groupby)
-                fam, blob = "block", _assembled_block_bytes(blob)
-            if fam in ("block", "taffy_block") and use_shm \
-                    and len(blob) >= _SHM_BLOB_FLOOR:
-                try:
-                    cached[g] = _filter_via_shm(token, g, fam, blob)
-                    continue
-                except OSError:
-                    pass  # shm full/unwritable → private copy
-            cached[g] = FAMILIES[fam].deserialize(blob)
-        _filter_cache_put(token, cached)
+        cached = {g: _assemble(fam, blob) if fam in _KINDS
+                  else FAMILIES[fam].deserialize(blob)
+                  for g, (fam, blob) in filter_map.items()}
+        cached = _cache_put(_FILTER_CACHE, token, cached,
+                            _FILTER_CACHE_MAX)
     return cached
 
 
@@ -1195,6 +1036,41 @@ def _with_route_shard(df: DataFrame, key_col: str, p: dict) -> DataFrame:
                                 int(p["n_shards"]))
     from .forest import with_shard
     return with_shard(df, key_col, int(p["n_shards"]))
+
+
+def _shard_cogroup(df: DataFrame, filters_df: DataFrame, key_col: str,
+                   result_col: str, p: dict | None = None) -> DataFrame:
+    """Shard-frame probe on the cogroup route: the blobs stay
+    distributed and the probe side gets the build's routing column.
+    ``p`` is the params row when the caller already has it."""
+    if p is None:
+        import json as _json
+        row = filters_df.select("params").first()
+        if row is None:  # empty build side: nothing can match
+            return df.withColumn(result_col, F.lit(False))
+        p = _json.loads(row["params"])
+    probe = _with_route_shard(df, key_col, p)
+    return _probe_via_cogroup(probe, filters_df, ["__shard"], key_col,
+                              result_col).drop("__shard")
+
+
+def _fingerprint(filters_df: DataFrame, id_cols: list[str], tag: str,
+                 *extra):
+    """One-pass JVM fingerprint of a CACHED filters frame: row count,
+    order-free content hash and total blob bytes — no blob transfer.
+    → (aggregate row with n/h/l plus ``extra`` columns, _PROBE_MEMO
+    key), the key None for an empty frame."""
+    agg = filters_df.agg(
+        F.count(F.lit(1)).alias("n"),
+        # bit_xor: order-independent and overflow-free (ANSI-safe);
+        # the group/shard ids inside the hash keep equal blobs of
+        # different groups from cancelling
+        F.bit_xor(F.xxhash64(*id_cols, "family", "filter")).alias("h"),
+        F.sum(F.length("filter")).alias("l"), *extra).first()
+    if not agg["n"]:
+        return agg, None
+    return agg, (filters_df.sparkSession.sparkContext.applicationId,
+                 tag, int(agg["n"]), int(agg["h"]), int(agg["l"]))
 
 
 def probe_with_filters(df: DataFrame, filters_df: DataFrame,
@@ -1240,26 +1116,17 @@ def probe_with_filters(df: DataFrame, filters_df: DataFrame,
     if _collected is None and group_cols:
         sl = filters_df.storageLevel
         if sl.useMemory or sl.useDisk:
-            # CACHED grouped frame: one-pass JVM fingerprint (count +
-            # order-free content hash + total bytes — no blob
-            # transfer); a repeat probe of the unchanged frame reuses
-            # the recorded broadcast directly
-            agg = filters_df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.bit_xor(F.xxhash64(*group_cols, "family", "filter"))
-                .alias("h"),
-                F.sum(F.length("filter")).alias("l")).first()
-            if not agg["n"]:
+            # CACHED grouped frame: a repeat probe of the unchanged
+            # frame reuses the recorded broadcast directly
+            agg, fp_key = _fingerprint(filters_df, group_cols, "groupfp")
+            if fp_key is None:
                 return df.withColumn(result_col, F.lit(False))
-            if via == "auto" and agg["l"] > _BROADCAST_MAX:
+            if via == "auto" and agg["l"] > _broadcast_max():
                 # over budget, known WITHOUT collecting any blob
                 return _probe_via_cogroup(df, filters_df, group_cols,
                                           key_col, result_col)
-            fp_key = (df.sparkSession.sparkContext.applicationId,
-                      "groupfp", int(agg["n"]), int(agg["h"]),
-                      int(agg["l"]))
             with _CACHE_LOCK:
-                bc = _GROUPED_PROBE_CACHE.get(fp_key)
+                bc = _PROBE_MEMO.get(fp_key)
             if bc is not None:
                 return _broadcast_probe_udf(df, bc, group_cols,
                                             key_col, result_col)
@@ -1274,11 +1141,7 @@ def probe_with_filters(df: DataFrame, filters_df: DataFrame,
                                       key_col, result_col)
     bc = _get_bc(df.sparkSession, filter_map)
     if fp_key is not None:
-        with _CACHE_LOCK:
-            while len(_GROUPED_PROBE_CACHE) >= _BC_CACHE_MAX:
-                _GROUPED_PROBE_CACHE.pop(
-                    next(iter(_GROUPED_PROBE_CACHE)), None)
-            _GROUPED_PROBE_CACHE[fp_key] = bc
+        _cache_put(_PROBE_MEMO, fp_key, bc, _PROBE_MEMO_MAX)
     return _broadcast_probe_udf(df, bc, group_cols, key_col, result_col)
 
 
@@ -1288,7 +1151,10 @@ def _get_bc(spark, filter_map: dict, token: str | None = None):
     frame then reuse BOTH the driver-side broadcast (no re-dump of a
     100 MB map per call) and the worker-side deserialized/assembled
     state (no workers × map_bytes of rebuild memcpy per call; measured
-    as the dominant cost of re-probing a 110 MB assembled forest)."""
+    as the dominant cost of re-probing a 110 MB assembled forest).
+    Eviction drops OUR reference only — plans still holding an evicted
+    broadcast keep it alive; ContextCleaner reclaims it when the last
+    reference goes."""
     if token is None:
         token = _content_token(filter_map)
     sc = spark.sparkContext
@@ -1296,17 +1162,9 @@ def _get_bc(spark, filter_map: dict, token: str | None = None):
     with _CACHE_LOCK:
         bc = _BC_CACHE.get(cache_key)
     if bc is None:
-        bc = sc.broadcast((token, filter_map))
-        with _CACHE_LOCK:
-            hit = _BC_CACHE.get(cache_key)
-            if hit is not None:
-                return hit  # raced another thread: reuse its broadcast
-            while len(_BC_CACHE) >= _BC_CACHE_MAX:
-                # drop OUR reference only — plans still holding the
-                # evicted broadcast keep it alive; ContextCleaner
-                # reclaims it when the last reference goes
-                _BC_CACHE.pop(next(iter(_BC_CACHE)), None)
-            _BC_CACHE[cache_key] = bc
+        # a thread that raced us here gets the first broadcast back
+        bc = _cache_put(_BC_CACHE, cache_key,
+                        sc.broadcast((token, filter_map)), _BC_CACHE_MAX)
     return bc
 
 
@@ -1316,15 +1174,15 @@ def _probe_shard_frame(df: DataFrame, filters_df: DataFrame,
     """GLOBAL probe against a distributed shard frame (block shards /
     filter forest). Routes by shape:
 
-    - ``bucket_range`` slices and single-level TBF forests assemble
-      into ONE probe object per worker (plain global probe — measured
-      ~1.5× over the grouped route for slices, ~3× for TBF forests:
-      no JVM shard column, no per-batch pandas groupby);
-    - GROWN multi-level TBF forests and uniform frozen-TCF forests
-      assemble per-level/per-side concatenated matrices (see
-      _TbfForestMultiProbe / _FrozenTcfForestProbe);
-    - live cuckoo forests probe through the grouped route on a
-      JVM-derived shard column;
+    - a frame whose family has an assembled kind (``_KINDS``: block
+      slices, taffy_block, frozen and live taffy_cuckoo) and whose
+      shards pass that kind's header check assembles into ONE probe
+      object per worker — concatenated matrices, one vectorized pass
+      per batch, no JVM shard column and no per-batch segmentation
+      (measured ~1.5× over the grouped route for slices, ~3× for TBF
+      forests);
+    - anything else (minimal_taffy_cuckoo, mixed or foreign shards)
+      probes through the grouped route on a JVM-derived shard column;
     - over-budget frames (or via='shuffle') keep blobs off the driver
       entirely via the cogroup route.
 
@@ -1336,39 +1194,21 @@ def _probe_shard_frame(df: DataFrame, filters_df: DataFrame,
     fingerprint pass would recompute their whole upstream build)."""
     import json as _json
 
-    spark = df.sparkSession
     if via == "shuffle":
-        row = filters_df.select("params").first()
-        if row is None:
-            return df.withColumn(result_col, F.lit(False))
-        p = _json.loads(row["params"])
-        probe = _with_route_shard(df, key_col, p)
-        return _probe_via_cogroup(probe, filters_df, ["__shard"],
-                                  key_col, result_col).drop("__shard")
+        return _shard_cogroup(df, filters_df, key_col, result_col)
 
     sl = filters_df.storageLevel
     fp_key = None
     if sl.useMemory or sl.useDisk:
-        agg = filters_df.agg(
-            F.count(F.lit(1)).alias("n"),
-            # bit_xor: order-independent and overflow-free (ANSI-safe);
-            # shard id inside the hash keeps equal blobs at different
-            # shards from cancelling
-            F.bit_xor(F.xxhash64("__shard", "family", "filter"))
-            .alias("h"),
-            F.sum(F.length("filter")).alias("l"),
-            F.first("params").alias("p")).first()
-        if not agg["n"]:
+        agg, fp_key = _fingerprint(filters_df, ["__shard"], "shardfp",
+                                   F.first("params").alias("p"))
+        if fp_key is None:
             return df.withColumn(result_col, F.lit(False))
-        p = _json.loads(agg["p"])
-        if via == "auto" and agg["l"] > _BROADCAST_MAX:
-            probe = _with_route_shard(df, key_col, p)
-            return _probe_via_cogroup(probe, filters_df, ["__shard"],
-                                      key_col, result_col).drop("__shard")
-        fp_key = (spark.sparkContext.applicationId, "shardfp",
-                  int(agg["n"]), int(agg["h"]), int(agg["l"]))
+        if via == "auto" and agg["l"] > _broadcast_max():
+            return _shard_cogroup(df, filters_df, key_col, result_col,
+                                  _json.loads(agg["p"]))
         with _CACHE_LOCK:
-            hit = _SHARD_PROBE_CACHE.get(fp_key)
+            hit = _PROBE_MEMO.get(fp_key)
         if hit is not None:
             mode, bc, p, asm_meta = hit
             return _probe_from_bc(df, bc, mode, p, key_col, result_col,
@@ -1378,94 +1218,35 @@ def _probe_shard_frame(df: DataFrame, filters_df: DataFrame,
     elif via == "auto":
         rows = _collect_shard_rows_auto(filters_df)
         if rows is None:  # over budget: blobs never hit the driver
-            row = filters_df.select("params").first()
-            if row is None:
-                return df.withColumn(result_col, F.lit(False))
-            p = _json.loads(row["params"])
-            probe = _with_route_shard(df, key_col, p)
-            return _probe_via_cogroup(probe, filters_df, ["__shard"],
-                                      key_col, result_col).drop("__shard")
+            return _shard_cogroup(df, filters_df, key_col, result_col)
     else:  # via == "broadcast": caller pinned the driver hop
         rows = filters_df.select("__shard", "params", "family",
                                  "filter").collect()
     if not rows:  # empty build side: nothing can match
         return df.withColumn(result_col, F.lit(False))
     p = _json.loads(rows[0]["params"])
-
-    mode = "grouped"
-    kind = None
-    if p.get("routing") == "bucket_range":
-        # worker-side slice assembly: one BlockFilter per worker,
-        # plain global probe
-        collected = {(): ("block_slice_set",
-                          [bytes(r["filter"]) for r in rows])}
-        mode, kind = "global", "block_slice_set"
-    elif all(r["family"] == "taffy_block" for r in rows):
-        # single-level TBF forest (the jvm engine's shape): one
-        # concatenated probe matrix per worker, ONE vectorized pass
-        # per batch instead of a pandas groupby + S tiny find calls
-        shard_blobs = {int(r["__shard"]): bytes(r["filter"])
-                       for r in rows}
-        if _tbf_level0_uniform(shard_blobs):
-            collected = {(): ("tbf_level0_set",
-                              (int(p["n_shards"]), shard_blobs))}
-            mode, kind = "global", "tbf_level0_set"
-        elif _tbf_forest_uniform(shard_blobs):
-            # grown multi-level forest: per-level concatenated
-            # matrices, newest-first probe with found-lane compression
-            collected = {(): ("tbf_forest_set",
-                              (int(p["n_shards"]), shard_blobs))}
-            mode, kind = "global", "tbf_forest_set"
-    elif all(r["family"] == "frozen_taffy_cuckoo" for r in rows):
-        # uniform frozen-TCF forest (the read-only serving shape):
-        # concatenated SWAR matrices, shared Feistel keys — one
-        # vectorized two-side pass per batch instead of S find calls
-        shard_blobs = {int(r["__shard"]): bytes(r["filter"])
-                       for r in rows}
-        if _frozen_tcf_uniform(shard_blobs):
-            collected = {(): ("frozen_tcf_set",
-                              (int(p["n_shards"]), shard_blobs))}
-            mode, kind = "global", "frozen_tcf_set"
-    elif all(r["family"] == "taffy_cuckoo" for r in rows):
-        # uniform LIVE TCF forest (freeze=False / absorb-capable):
-        # concatenated u16 slot matrices, shared Feistel keys — one
-        # vectorized two-side pass per batch instead of S find calls
-        shard_blobs = {int(r["__shard"]): bytes(r["filter"])
-                       for r in rows}
-        if _live_tcf_uniform(shard_blobs):
-            collected = {(): ("tcf_set",
-                              (int(p["n_shards"]), shard_blobs))}
-            mode, kind = "global", "tcf_set"
-    # minimal_taffy_cuckoo forests deliberately stay on the grouped
-    # route: each shard's level geometry depends on its own cursor
-    # (which levels doubled) and per-side hi/lo permutations, so a
-    # shared-permutation concatenated matrix does not exist unless
-    # every shard grew in lockstep — and the measured headroom is
-    # small (100M sweep: MTCF grouped 14.3 Mk/s vs TCF assembled
-    # 16.7, BENCH/growth100m.json).
-    if mode == "grouped":
-        collected = {(int(r["__shard"]),): (r["family"],
-                                            bytes(r["filter"]))
+    n_sh = int(p["n_shards"])
+    shard_blobs = {int(r["__shard"]): bytes(r["filter"]) for r in rows}
+    fams = {r["family"] for r in rows}
+    cls = _KIND_OF_FAMILY.get(fams.pop()) if len(fams) == 1 else None
+    if cls is not None and cls.uniform(shard_blobs):
+        mode, collected = "global", {(): (cls.kind, (n_sh, shard_blobs))}
+    else:
+        mode = "grouped"
+        collected = {(int(r["__shard"]),):
+                     (r["family"], shard_blobs[int(r["__shard"])])
                      for r in rows}
     token = _content_token(collected)
     # big assembled state → share it across workers via /dev/shm
     # (single assembler + read-only attach; see _publish_assembled)
     asm_meta = None
     if mode == "global" and os.path.isdir("/dev/shm") \
-            and _blob_bytes(collected[()][1]) >= _SHM_ASM_MIN:
-        asm_meta = {"token": token, "kind": kind,
-                    "n_shards": int(p["n_shards"])}
-        if kind == "block_slice_set" and "num_buckets" in p:
-            # exact expected size of the assembled global filter —
-            # lets the attacher reject a truncated/foreign file
-            asm_meta["bytes"] = int(p["num_buckets"]) * 32
-    bc = _get_bc(spark, collected, token)
+            and sum(map(len, shard_blobs.values())) >= _SHM_ASM_MIN:
+        asm_meta = {"token": token, "kind": cls.kind, "n_shards": n_sh}
+    bc = _get_bc(df.sparkSession, collected, token)
     if fp_key is not None:
-        with _CACHE_LOCK:
-            while len(_SHARD_PROBE_CACHE) >= _BC_CACHE_MAX:
-                _SHARD_PROBE_CACHE.pop(
-                    next(iter(_SHARD_PROBE_CACHE)), None)
-            _SHARD_PROBE_CACHE[fp_key] = (mode, bc, p, asm_meta)
+        _cache_put(_PROBE_MEMO, fp_key, (mode, bc, p, asm_meta),
+                   _PROBE_MEMO_MAX)
     return _probe_from_bc(df, bc, mode, p, key_col, result_col, asm_meta)
 
 
@@ -1475,10 +1256,9 @@ def _probe_from_bc(df: DataFrame, bc, mode: str, p: dict,
     if mode == "global":
         return _broadcast_probe_udf(df, bc, [], key_col, result_col,
                                     asm_meta)
-    from .forest import SHARD_COL, with_shard
-    probe = with_shard(df, key_col, int(p["n_shards"]))
-    return _broadcast_probe_udf(probe, bc, [SHARD_COL], key_col,
-                                result_col).drop(SHARD_COL)
+    probe = _with_route_shard(df, key_col, p)
+    return _broadcast_probe_udf(probe, bc, ["__shard"], key_col,
+                                result_col).drop("__shard")
 
 
 def _broadcast_probe_udf(df: DataFrame, bc, group_cols: list[str],
@@ -1543,9 +1323,8 @@ def _broadcast_probe_udf(df: DataFrame, bc, group_cols: list[str],
         if f is None:
             return pa.array(np.zeros(len(keys), dtype=bool))
         k, valid = keys_and_valid_from_arrow(keys)
-        if isinstance(f, (_TbfForestProbe, _TbfForestMultiProbe,
-                          _FrozenTcfForestProbe, _LiveTcfForestProbe)):
-            # the assembled forest routes by the xxhash64 replica,
+        if isinstance(f, _ASSEMBLED):
+            # an assembled forest routes by the xxhash64 replica,
             # which hashes binary and int64 key columns differently —
             # the Arrow type is the authority
             binary = not pa.types.is_integer(keys.type)

@@ -345,18 +345,13 @@ def assemble_block_shards(shards_df: DataFrame) -> bytes:
     byte-identical to a single-process build over the same keys.
     Driver memory = full filter size — use only when a single
     exportable blob is genuinely needed (cross-system handoff)."""
-    rows = shards_df.select(SHARD_COL, "params", "filter").collect()
+    from .probe import _BlockSliceProbe
+    rows = shards_df.select(SHARD_COL, "filter").collect()
     if not rows:
         raise ValueError("cannot assemble an empty shard frame")
-    p = json.loads(rows[0]["params"])
-    num_buckets = int(p["num_buckets"])
-    out = bytearray(num_buckets * BUCKET_BYTES)
-    for r in rows:
-        sl = BlockSliceFilter.deserialize(bytes(r["filter"]))
-        off = sl.lo * BUCKET_BYTES
-        blob = sl.state.astype("<u4", copy=False).tobytes()
-        out[off:off + len(blob)] = blob
-    return bytes(out)
+    blobs = {int(r[SHARD_COL]): bytes(r["filter"]) for r in rows}
+    return _BlockSliceProbe.assemble(len(blobs), blobs).state \
+        .astype("<u4", copy=False).tobytes()
 
 
 def build_block_filter_sharded(df: DataFrame, key_col: str = "key",

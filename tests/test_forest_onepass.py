@@ -102,11 +102,12 @@ def test_packed_forest_engine_matches_streamed(spark):
 
 def test_assembled_tbf_forest_probe_matches_grouped(spark):
     """Round-5: a single-level taffy_block forest (the jvm engine's
-    shape) probes through the assembled one-matrix fast path; answers
-    must equal the grouped shard route for binary AND long keys,
-    including absent keys and nulls; a grown multi-level forest must
-    fall back (not crash, same answers)."""
+    shape) probes through the assembled forest probe as a stack of
+    one; answers must equal the grouped shard route for binary AND
+    long keys, including absent keys and nulls; a grown multi-level
+    forest takes the same assembled probe (same answers)."""
     import libfilter_spark.spark.probe as P
+    from libfilter_spark.filters.taffy_block import TaffyBlockFilter
     from libfilter_spark.spark.forest import (build_filter_forest,
                                               probe_with_forest)
     from libfilter_spark.spark.keys import (with_content_key,
@@ -124,7 +125,9 @@ def test_assembled_tbf_forest_probe_matches_grouped(spark):
                                      engine="jvm").cache()
         rows = forest.collect()
         blobs = {int(r["__shard"]): bytes(r["filter"]) for r in rows}
-        assert P._tbf_level0_uniform(blobs)  # fast path eligible
+        assert P._tbf_forest_uniform(blobs)  # fast path eligible
+        assert all(len(TaffyBlockFilter.deserialize(b).levels) == 1
+                   for b in blobs.values())  # the L=1 stack
         found = probe_with_forest(keys, forest, "key") \
             .where("maybe_seen").count()
         assert found == n  # zero FN through the assembled path
@@ -150,8 +153,9 @@ def test_assembled_tbf_forest_probe_matches_grouped(spark):
                                 engine="arrow").cache()
     gb = {int(r["__shard"]): bytes(r["filter"])
           for r in grown.collect()}
-    assert not P._tbf_level0_uniform(gb)
     assert P._tbf_forest_uniform(gb)
+    assert any(len(TaffyBlockFilter.deserialize(b).levels) > 1
+               for b in gb.values())  # grown
     assert probe_with_forest(keys, grown, "key") \
         .where("maybe_seen").count() == n
     from libfilter_spark.spark.forest import SHARD_COL, with_shard
@@ -329,7 +333,7 @@ def test_assembled_frozen_tcf_probe_unit():
         fr = f.freeze()
         frozen[s] = fr
         blobs[s] = fr.serialize()
-    assert P._frozen_tcf_uniform(blobs)
+    assert P._FrozenTcfForestProbe.uniform(blobs)
     pv = P._FrozenTcfForestProbe.assemble(n_sh, blobs)
     assert pv is not None
     # zero FN for keys of PRESENT shards
@@ -360,7 +364,7 @@ def test_assembled_frozen_tcf_probe_unit():
     big.add_hashes(keys[:100])
     blobs2 = dict(blobs)
     blobs2[n_sh - 1] = big.freeze().serialize()
-    assert not P._frozen_tcf_uniform(blobs2)
+    assert not P._FrozenTcfForestProbe.uniform(blobs2)
     assert P._FrozenTcfForestProbe.assemble(n_sh, blobs2) is None
 
 
@@ -388,7 +392,7 @@ def test_assembled_frozen_tcf_probe_matches_grouped(spark):
                                      freeze=True).cache()
         rows = forest.collect()
         blobs = {int(r["__shard"]): bytes(r["filter"]) for r in rows}
-        assert P._frozen_tcf_uniform(blobs)  # fast path eligible
+        assert P._FrozenTcfForestProbe.uniform(blobs)  # fast path eligible
         found = probe_with_forest(keys, forest, "key") \
             .where("maybe_seen").count()
         assert found == n  # zero FN through the assembled path
@@ -483,7 +487,7 @@ def test_assembled_live_tcf_probe_unit():
         live[s] = f
         blobs[s] = f.serialize()
     assert stash_probe_keys  # the plant must exercise the stash path
-    assert P._live_tcf_uniform(blobs)
+    assert P._LiveTcfForestProbe.uniform(blobs)
     pv = P._LiveTcfForestProbe.assemble(n_sh, blobs)
     assert pv is not None
     assert pv.find(np.array(stash_probe_keys, dtype=np.uint64),
@@ -518,9 +522,9 @@ def test_assembled_live_tcf_probe_unit():
     big.add_hashes(keys[:100])
     blobs2 = dict(blobs)
     blobs2[n_sh - 1] = big.serialize()
-    assert not P._live_tcf_uniform(blobs2)
+    assert not P._LiveTcfForestProbe.uniform(blobs2)
     assert P._LiveTcfForestProbe.assemble(n_sh, blobs2) is None
-    assert P._live_tcf_uniform({}) is False
+    assert P._LiveTcfForestProbe.uniform({}) is False
 
 
 def test_assembled_live_tcf_probe_matches_grouped(spark):
@@ -548,7 +552,7 @@ def test_assembled_live_tcf_probe_matches_grouped(spark):
         rows = forest.collect()
         assert all(r["family"] == "taffy_cuckoo" for r in rows)
         blobs = {int(r["__shard"]): bytes(r["filter"]) for r in rows}
-        assert P._live_tcf_uniform(blobs)  # fast path eligible
+        assert P._LiveTcfForestProbe.uniform(blobs)  # fast path eligible
         found = probe_with_forest(keys, forest, "key") \
             .where("maybe_seen").count()
         assert found == n  # zero FN through the assembled path
@@ -603,7 +607,7 @@ def test_live_tcf_nonuniform_forest_falls_back_grouped(spark):
     logs = {TaffyCuckooFilter.deserialize(b).log_side_size
             for b in blobs.values()}
     assert len(logs) > 1          # geometry actually diverged
-    assert not P._live_tcf_uniform(blobs)
+    assert not P._LiveTcfForestProbe.uniform(blobs)
     assert P._LiveTcfForestProbe.assemble(n_sh, blobs) is None
     forest2 = spark.createDataFrame(
         pd.DataFrame([{**r, "filter": bytes(r["filter"])}

@@ -54,9 +54,31 @@ def test_probe_auto_budget_falls_back_to_shuffle(spark, grouped_setup,
     filters, probe = grouped_setup
     expect = _result_map(probe_with_filters(probe, filters, ["g"],
                                             via="broadcast"))
-    monkeypatch.setattr(P, "_BROADCAST_MAX", 8)  # force overflow
+    monkeypatch.setenv("LIBFILTER_BROADCAST_MAX", "8")  # force overflow
     got = _result_map(probe_with_filters(probe, filters, ["g"],
                                          via="auto"))
+    assert got == expect
+
+
+def test_broadcast_budget_env_read_at_call_time(spark, grouped_setup,
+                                                monkeypatch):
+    """$LIBFILTER_BROADCAST_MAX set AFTER the module was imported must
+    still govern the auto route: an 8-byte budget sends a cached
+    grouped frame to the cogroup route, with the broadcast answers."""
+    import libfilter_spark.spark.probe as P
+    filters, probe = grouped_setup
+    expect = _result_map(probe_with_filters(probe, filters, ["g"],
+                                            via="broadcast"))
+    calls = []
+    cogroup = P._probe_via_cogroup
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return cogroup(*a, **kw)
+    monkeypatch.setattr(P, "_probe_via_cogroup", spy)
+    monkeypatch.setenv("LIBFILTER_BROADCAST_MAX", "8")
+    got = _result_map(probe_with_filters(probe, filters, ["g"]))
+    assert calls == [1]
     assert got == expect
 
 
@@ -263,7 +285,7 @@ def test_shard_frame_auto_overbudget_stays_off_driver(spark,
               for r in probe_with_filters(probe_keys, shards, None,
                                           via="broadcast").collect()}
     assert all(expect[str(i)] for i in range(4_000))
-    monkeypatch.setattr(P, "_BROADCAST_MAX", 8)
+    monkeypatch.setenv("LIBFILTER_BROADCAST_MAX", "8")
     # uncached arm: budgeted toLocalIterator stops within budget.
     # The iterator arm only engages on big sessions (>64 shuffle
     # partitions — small sessions plain-collect, see
@@ -285,45 +307,12 @@ def test_shard_frame_auto_overbudget_stays_off_driver(spark,
     assert got_cached == expect
 
 
-def test_filter_via_shm_zero_copy_equivalent():
-    """The shm memmap path (what a worker runs past _SHM_MIN_BYTES)
-    must probe identically to the private-copy deserialize for both
-    covered families — block (raw u4 view) and taffy_block (grown
-    multi-level stack via deserialize_view). No Spark: _materialize's
-    worker-side branch is exercised directly."""
-    import os
-    import uuid
-
-    import numpy as np
-    import pytest as _pytest
-
-    if not os.path.isdir("/dev/shm"):
-        _pytest.skip("no /dev/shm")
-    from libfilter_spark.filters import BlockFilter, TaffyBlockFilter
-    from libfilter_spark.kernels.keys import splitmix64
-    from libfilter_spark.spark.probe import _filter_via_shm
-    keys = splitmix64(30_000, seed=3)
-    absent = splitmix64(60_000, seed=3)[30_000:]
-    token = uuid.uuid4().hex
-    bf = BlockFilter.create_with_ndv_fpp(30_000, 0.01)
-    bf.add_hashes(keys)
-    tbf = TaffyBlockFilter.create(64, 0.01)
-    tbf.add_hashes(keys)  # grown: multi-level
-    for fam, f in (("block", bf), ("taffy_block", tbf)):
-        g = _filter_via_shm(token, (fam,), fam, f.serialize())
-        assert g.find_hashes(keys).all()
-        assert np.array_equal(g.find_hashes(absent),
-                              f.find_hashes(absent))
-        # second call (another worker) reuses the same shm file
-        h = _filter_via_shm(token, (fam,), fam, f.serialize())
-        assert h.find_hashes(keys).all()
-
-
 def test_shared_assembled_state_equivalent():
     """The /dev/shm shared-assembly path (what workers run past
     _SHM_ASM_MIN on a global shard probe) must agree with private
-    assembly for both assembled kinds — the single-level TBF forest
-    matrix and the block-slice global filter — across all three
+    assembly for both assembled kinds — a single-level TBF forest
+    (the jvm engine's pre-sized shape) and the block-slice global
+    filter — across all three
     worker roles: publisher (lock holder), attacher (file already
     present, no broadcast unpickle), and private fallback (publisher
     too slow). No Spark: _materialize's worker branch is exercised
@@ -361,11 +350,11 @@ def test_shared_assembled_state_equivalent():
             assert len(f.levels) == 1
             blobs[s] = f.serialize()
         token = uuid.uuid4().hex
-        meta = {"token": token, "kind": "tbf_level0_set",
+        meta = {"token": token, "kind": "tbf_forest_set",
                 "n_shards": n_sh}
-        made.append(P._asm_path(token, "tbf_level0_set"))
-        fmap = {(): ("tbf_level0_set", (n_sh, blobs))}
-        priv = P._TbfForestProbe.assemble(n_sh, blobs)
+        made.append(P._asm_path(token, "tbf_forest_set"))
+        fmap = {(): ("tbf_forest_set", (n_sh, blobs))}
+        priv = P._TbfForestMultiProbe.assemble(n_sh, blobs)
 
         # role 1: publisher — no file yet, takes the lock, publishes
         P._FILTER_CACHE.clear()
@@ -417,7 +406,8 @@ def test_shared_assembled_state_equivalent():
         meta2 = {"token": token2, "kind": "block_slice_set",
                  "n_shards": len(slices)}
         made.append(P._asm_path(token2, "block_slice_set"))
-        fmap2 = {(): ("block_slice_set", slices)}
+        fmap2 = {(): ("block_slice_set",
+                      (len(slices), dict(enumerate(slices))))}
         P._FILTER_CACHE.clear()
         pub2 = P._materialize(FakeBC(token2, fmap2), meta2)[()]
         assert os.path.exists(made[-1])
@@ -587,7 +577,7 @@ def test_small_session_precheck_keeps_blobs_off_driver(spark,
     expect = {r["content"]: r["maybe_seen"]
               for r in probe_with_filters(probe_keys, shards, None,
                                           via="broadcast").collect()}
-    monkeypatch.setattr(P, "_BROADCAST_MAX", 8)
+    monkeypatch.setenv("LIBFILTER_BROADCAST_MAX", "8")
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         got = {r["content"]: r["maybe_seen"]
@@ -640,37 +630,43 @@ def test_truncated_published_state_falls_back():
                   for lo, hi in zip(bounds, bounds[1:])]
         token = uuid.uuid4().hex
         meta = {"token": token, "kind": "block_slice_set",
-                "n_shards": 2, "bytes": nb * 32}
+                "n_shards": 2}
         path = P._asm_path(token, "block_slice_set")
         made.append(path)
         np.zeros(7, dtype=np.uint8).tofile(path)  # truncated garbage
         assert P._attach_assembled(meta) is None
         P._FILTER_CACHE.clear()
         got = P._materialize(
-            FakeBC(token, {(): ("block_slice_set", slices)}), meta)[()]
+            FakeBC(token, {(): ("block_slice_set",
+                                (2, dict(enumerate(slices))))}),
+            meta)[()]
         assert got.find_hashes(keys).all()
         assert np.array_equal(got.find_hashes(absent),
                               full.find_hashes(absent))
-        assert os.path.getsize(path) == nb * 32  # republished correct
+        # republished correct: [n_shards, num_buckets] + the filter
+        assert os.path.getsize(path) == 16 + nb * 32
 
-        # --- tbf_level0_set kind (size-divisibility guard) ---
+        # --- tbf_forest_set kind, single-level shards (header guard) ---
         n_sh = 4
         shards = shard_of_keys(keys, n_sh, binary=False)
         blobs = {}
         for s in range(n_sh):
             f = TaffyBlockFilter.create(8_000, 0.004)
             f.add_hashes(keys[shards == s])
+            assert len(f.levels) == 1
             blobs[s] = f.serialize()
         token2 = uuid.uuid4().hex
-        meta2 = {"token": token2, "kind": "tbf_level0_set",
+        meta2 = {"token": token2, "kind": "tbf_forest_set",
                  "n_shards": n_sh}
-        path2 = P._asm_path(token2, "tbf_level0_set")
+        path2 = P._asm_path(token2, "tbf_forest_set")
         made.append(path2)
         np.zeros(13, dtype=np.uint8).tofile(path2)  # non-divisible
         assert P._attach_assembled(meta2) is None
+        np.zeros(6, dtype=np.uint64).tofile(path2)  # bad header
+        assert P._attach_assembled(meta2) is None
         P._FILTER_CACHE.clear()
         got2 = P._materialize(
-            FakeBC(token2, {(): ("tbf_level0_set", (n_sh, blobs))}),
+            FakeBC(token2, {(): ("tbf_forest_set", (n_sh, blobs))}),
             meta2)[()]
         assert got2.find(keys, binary=False).all()
     finally:
@@ -680,6 +676,46 @@ def test_truncated_published_state_falls_back():
                 os.unlink(pth)
             except OSError:
                 pass
+
+
+def test_cache_put_bounded_under_thread_contention():
+    """The one bounded put behind every probe cache: with more threads
+    than cores and a tiny switch interval, FIFO eviction never raises
+    and never overshoots the cap, and threads racing on ONE key all get
+    the first value back (one broadcast per content token)."""
+    import sys
+    import threading
+
+    import libfilter_spark.spark.probe as P
+
+    cache, shared, errors = {}, {}, []
+    results = []
+
+    def worker(t):
+        try:
+            for i in range(3_000):
+                P._cache_put(cache, (t, i % 40), i, 8)
+                assert len(cache) <= 8
+            results.append(P._cache_put(shared, "token", t, 8))
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,))
+                   for t in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert len(cache) <= 8
+    assert len(results) == 16 and len(set(results)) == 1
+    assert results[0] == shared["token"]
 
 
 def test_stale_lock_takeover_is_compare_and_swap():
@@ -766,7 +802,7 @@ def test_grouped_probe_content_cache_skips_recollect(spark,
     produce its own answers."""
     import libfilter_spark.spark.probe as P
 
-    P._GROUPED_PROBE_CACHE.clear()
+    P._PROBE_MEMO.clear()
     build = spark.range(2_000).select(
         (F.col("id") % 4).cast("string").alias("g"),
         F.col("id").cast("string").alias("content"))

@@ -226,44 +226,49 @@ def test_static_xor_fast_matches_exact_membership(seed, n):
        drop=st.integers(min_value=0, max_value=2))
 def test_assembled_tbf_forest_probe_parity(seed, n, n_shards, grow,
                                            drop):
-    """The multi-level assembled TBF forest probe must answer
-    bit-identically to per-shard ``find_hashes`` under ANY shard
-    count, ragged growth pattern, and missing-shard subset (missing
-    shards report False), and its publisher image must round-trip.
-    Randomized generalization of
+    """The assembled TBF forest probe must answer bit-identically to
+    per-shard ``find_hashes`` under ANY shard count, ragged growth
+    pattern, and missing-shard subset (missing shards report False),
+    and its publisher image must round-trip — both for grown forests
+    and for pre-sized single-level ones (the jvm engine's shape: a
+    stack of one level). Randomized generalization of
     tests/test_forest_onepass.py::test_assembled_tbf_multilevel_probe_unit."""
     import libfilter_spark.spark.probe as P
     from libfilter_spark.kernels.keys import shard_of_keys
 
     keys = _keys(n, seed)
     sh = shard_of_keys(keys, n_shards, binary=False)
-    blobs, filters = {}, {}
-    for s in range(n_shards):
-        ks = keys[sh == s]
-        if s < grow:  # ragged: some shards several levels deeper
-            extra = _keys(30_000 * (s + 1), seed ^ (s + 1))
-            ks = np.concatenate(
-                [ks, extra[shard_of_keys(extra, n_shards,
-                                         binary=False) == s]])
-        f = TaffyBlockFilter.create(64, 0.01)
-        if len(ks):
-            f.add_hashes(ks)
-        filters[s], blobs[s] = f, f.serialize()
-    for s in range(min(drop, n_shards - 1)):  # keep >= 1 shard
-        del blobs[n_shards - 1 - s]
-    pv = P._TbfForestMultiProbe.assemble(n_shards, blobs)
-    assert pv is not None
     absent = _keys(2 * n, ~seed & 0xFFFFFFFF)[n:]
     mixed = np.concatenate([keys, absent])
     msh = shard_of_keys(mixed, n_shards, binary=False)
-    expect = np.zeros(len(mixed), dtype=bool)
-    for s in blobs:
-        m = msh == s
-        expect[m] = filters[s].find_hashes(mixed[m])
-    assert np.array_equal(pv.find(mixed, binary=False), expect)
-    pv2 = P._TbfForestMultiProbe.from_raw(n_shards, pv.to_raw())
-    assert pv2 is not None
-    assert np.array_equal(pv2.find(mixed, binary=False), expect)
+    for presized in (False, True):
+        blobs, filters = {}, {}
+        for s in range(n_shards):
+            ks = keys[sh == s]
+            if s < grow and not presized:
+                # ragged: some shards several levels deeper
+                extra = _keys(30_000 * (s + 1), seed ^ (s + 1))
+                ks = np.concatenate(
+                    [ks, extra[shard_of_keys(extra, n_shards,
+                                             binary=False) == s]])
+            f = TaffyBlockFilter.create(
+                2 * n // n_shards + 64 if presized else 64, 0.01)
+            if len(ks):
+                f.add_hashes(ks)
+            assert not presized or len(f.levels) == 1
+            filters[s], blobs[s] = f, f.serialize()
+        for s in range(min(drop, n_shards - 1)):  # keep >= 1 shard
+            del blobs[n_shards - 1 - s]
+        pv = P._TbfForestMultiProbe.assemble(n_shards, blobs)
+        assert pv is not None
+        expect = np.zeros(len(mixed), dtype=bool)
+        for s in blobs:
+            m = msh == s
+            expect[m] = filters[s].find_hashes(mixed[m])
+        assert np.array_equal(pv.find(mixed, binary=False), expect)
+        pv2 = P._TbfForestMultiProbe.from_raw(n_shards, pv.to_raw())
+        assert pv2 is not None
+        assert np.array_equal(pv2.find(mixed, binary=False), expect)
 
 
 @settings(max_examples=8, deadline=None)
@@ -297,7 +302,7 @@ def test_assembled_frozen_tcf_forest_probe_parity(seed, n, n_shards,
         del blobs[n_shards - 1 - s]
     pv = P._FrozenTcfForestProbe.assemble(n_shards, blobs)
     if pv is None:  # uneven growth made shards non-uniform: refusal
-        assert not P._frozen_tcf_uniform(blobs)
+        assert not P._FrozenTcfForestProbe.uniform(blobs)
         return
     absent = _keys(2 * n, ~seed & 0xFFFFFFFF)[n:]
     mixed = np.concatenate([keys, absent])
@@ -341,7 +346,7 @@ def test_assembled_live_tcf_forest_probe_parity(seed, n, n_shards,
         del blobs[n_shards - 1 - s]
     pv = P._LiveTcfForestProbe.assemble(n_shards, blobs)
     if pv is None:  # uneven growth made shards non-uniform: refusal
-        assert not P._live_tcf_uniform(blobs)
+        assert not P._LiveTcfForestProbe.uniform(blobs)
         return
     absent = _keys(2 * n, ~seed & 0xFFFFFFFF)[n:]
     mixed = np.concatenate([keys, absent])
